@@ -210,3 +210,46 @@ def test_multi_target_sync(spark, tmp_path):
     )
     assert set(res) == {"local", "pinecone"}
     assert state.read().select("target").distinct().count() == 2
+
+
+def _cached_relations(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+def test_resync_commits_once_per_store_and_skips_every_product(spark, env):
+    """After a tail edit only the edited chunk carries the new
+    product_sha, so the ledger's max(product_sha) can be the stale one.
+    The identical re-sync must still skip every product; each re-sync
+    commits each store at most once and leaves no cached relation."""
+    import hashlib
+
+    config, state, index, _ = env
+
+    def product_sha(text: str) -> str:
+        payload = config.fingerprint_payload_json() + "\n" + text
+        return hashlib.sha256(payload.encode("utf-8")).hexdigest()
+
+    base = mklong(1)
+    # a tail edit whose new product_sha sorts below the old one
+    edited = next(
+        e for e in (f"{base} Ending {i}." for i in range(100))
+        if product_sha(e) < product_sha(base)
+    )
+    texts = {1: base, 2: "short doc one."}
+    cached = _cached_relations(spark)
+    run_sync(spark, env, texts)
+    assert _cached_relations(spark) == cached
+
+    texts[1] = edited
+    v_state, v_index = state.current_version(), index.current_version()
+    s = run_sync(spark, env, texts)
+    assert s.upserted > 0 and s.skipped_products == 1
+    assert (state.current_version(), index.current_version()) == (v_state + 1, v_index + 1)
+    shas = {r.product_sha for r in state.read().filter("product_id = 1").collect()}
+    assert max(shas) == product_sha(base) != product_sha(edited)  # stale sha is the max
+
+    s = run_sync(spark, env, texts)
+    assert s.upserted == s.deleted == 0
+    assert s.skipped_products == len(texts)
+    assert (state.current_version(), index.current_version()) == (v_state + 2, v_index + 1)
+    assert _cached_relations(spark) == cached

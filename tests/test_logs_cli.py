@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import csv
 import glob
+import json
 import os
 import subprocess
 import sys
@@ -113,6 +114,17 @@ def test_sync_telemetry_rows(spark, tmp_path):
     r = rows[0]
     assert r.outcome == "success" and r.target == "local"
     assert "upserted=" in r.message and r.duration_ms > 0
+    details = json.loads(r.details)
+    assert {k: details[k] for k in ("upserted", "deleted", "skipped", "errored")} == {
+        "upserted": r["count"], "deleted": 0, "skipped": 0, "errored": 0
+    }
+    assert r["count"] > 0
+    assert set(details["seconds"]) == {"chunk_diff", "embed", "commit"}
+    assert all(v >= 0 for v in details["seconds"].values())
+    assert details["seconds"]["embed"] > 0 and details["seconds"]["commit"] > 0
+    assert details["versions"] == {
+        "index": index.current_version(), "state": state.current_version()
+    }
 
 
 def test_cli_curate_and_mix(spark, tmp_path, capsys):

@@ -202,3 +202,27 @@ def test_time_travel_reads_retained_versions(spark, tmp_path):
     store.release_leases()
     with pytest.raises(ValueError, match="not retained"):
         store.read(version=1)
+
+
+def test_delete_products_rewrites_only_their_bucket(spark, tmp_path):
+    """Deleting one product of many rewrites only the bucket it hashes
+    into, in both stores, and reports the index rows it removed."""
+    from wc_vector_indexing_spark.operators.delta_sync import delete_products
+    from wc_vector_indexing_spark.state.store import vector_index_store
+
+    state = sync_state_store(spark, str(tmp_path / "st"))
+    index = vector_index_store(spark, str(tmp_path / "ix"))
+    _seed(spark, state)
+    index.overwrite(spark.createDataFrame(
+        [("local", f"v{p}:{c}", p, c) for p in range(60) for c in range(2)],
+        "target string, vector_id string, product_id long, chunk_index int",
+    ))
+    before = [_manifest(s) for s in (state, index)]
+
+    assert delete_products([7], state, index) == 2
+
+    for store, old in zip((state, index), before):
+        new = _manifest(store)
+        assert len([b for b in old if new.get(b) != old[b]]) == 1
+        assert store.read().count() == 118
+        assert store.read().filter("product_id = 7").count() == 0

@@ -82,6 +82,45 @@ def test_stream_end_to_end_with_deletes(spark, tmp_path):
     assert st.filter("product_id = 4").count() == 0
 
 
+def test_stream_releases_cached_batches(spark, tmp_path):
+    """Every micro-batch the sync stream caches is released again: after
+    an availableNow run of two data batches the CacheManager holds as
+    many entries as before."""
+    config = EngineConfig(
+        model="fake-deterministic-64", chunking=ChunkingConfig(size=25, overlap=4)
+    )
+    products = spark.createDataFrame([Row(product_id=1, text="Cached batch product.")])
+    ev_dir = str(tmp_path / "events")
+    # one file per event → one micro-batch each: a sync, then a delete
+    for i, change in enumerate(("save", "delete")):
+        spark.createDataFrame(
+            [Row(product_id=1, change_type=change, event_ts=T0 + timedelta(minutes=i))],
+            CHANGE_EVENT_SCHEMA,
+        ).write.parquet(f"{ev_dir}/f{i}")
+
+    def cached() -> int:
+        return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+    before = cached()
+    stream = (
+        spark.readStream.schema(CHANGE_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{ev_dir}/*")
+    )
+    index = vector_index_store(spark, str(tmp_path / "index"))
+    q = start_incremental_stream(
+        stream, products, sync_state_store(spark, str(tmp_path / "state")), index,
+        config, DeterministicEmbedder(),
+        checkpoint_dir=str(tmp_path / "ckpt"), text_col="text",
+    )
+    q.awaitTermination(120)
+    q.stop()
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 2
+    assert cached() == before
+    # both batches wrote: the sync published v1, the delete v2
+    assert index.current_version() == 2 and index.read().count() == 0
+
+
 def test_windowed_event_aggregate_matches_batch(spark):
     from wc_vector_indexing_spark.sources.readers import load
 

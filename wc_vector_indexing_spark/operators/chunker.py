@@ -37,6 +37,7 @@ from wc_vector_indexing_spark.config import (
     DEFAULT_CHUNK_OVERLAP,
     DEFAULT_CHUNK_SIZE,
 )
+from wc_vector_indexing_spark.functions.partitioning import fan_out
 
 CHUNK_STRUCT = T.StructType(
     [
@@ -230,10 +231,9 @@ def chunk_documents(
     it is under-partitioned. At real scale the scan already yields
     hundreds of partitions and the repartition is a no-op branch.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        df = df.repartition(target)
-    chunked = df.withColumn("_chunks", chunk_udf(size=size, overlap=overlap)(F.col(text_col)))
+    chunked = fan_out(df).withColumn(
+        "_chunks", chunk_udf(size=size, overlap=overlap)(F.col(text_col))
+    )
     exploded = chunked.select("*", F.explode("_chunks").alias("_c")).drop("_chunks")
     return (
         exploded.withColumn("chunk_index", F.col("_c.index"))

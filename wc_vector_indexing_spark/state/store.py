@@ -14,17 +14,20 @@ replacement with BUCKET-LEVEL copy-on-write:
       _LATEST                          text file naming the live version
 
 Rows hash into ``n_buckets`` buckets on ``bucket_cols``
-(pmod(xxhash64(cols), n)). A MERGE derives the touched buckets from the
-update keys, reads ONLY those buckets' files, rewrites ONLY those
-buckets into a new data dir, and publishes a new manifest that maps the
-touched buckets to the new files while every untouched bucket keeps
-pointing at its existing files. Write cost is therefore proportional to
-the buckets an update batch touches, not the table — the same cost
-model as Delta/Iceberg ``MERGE INTO`` with file-level pruning, which
-this store stands in for (manifests instead of transaction logs; on a
-real cluster swap the class for a Delta table, every call site keeps
-its semantics). A 100 TB ledger at n_buckets=1024 pays ~0.1% of a full
-rewrite for a single-product incremental sync instead of 100%.
+(pmod(xxhash64(cols), n)). Every keyed write — ``merge`` (with optional
+deletes, so a sync commits its stale deletes and its upserts as one
+MERGE), ``delete_keys`` and ``update_keys`` — goes through one private
+rewrite: derive the touched buckets from the key frame, read ONLY those
+buckets' files, compute their new contents, write them into a new data
+dir, and publish a new manifest that maps the touched buckets to the
+new files while every untouched bucket keeps pointing at its existing
+files. Write cost is therefore proportional to the buckets a write
+touches, not the table — the same cost model as Delta/Iceberg ``MERGE
+INTO`` with file-level pruning, which this store stands in for
+(manifests instead of transaction logs; on a real cluster swap the
+class for a Delta table, every call site keeps its semantics). A 100 TB
+ledger at n_buckets=1024 pays ~0.1% of a full rewrite for a
+single-product incremental sync instead of 100%.
 
 Publishing stays atomic: data files land first, then the manifest,
 then ``_LATEST`` flips via write-temp + rename. Readers resolve
@@ -349,47 +352,52 @@ class ParquetMergeStore:
     def overwrite(self, df: DataFrame) -> int:
         return self._publish_full(self._conform(df))
 
-    def merge(self, updates: DataFrame, immutable_cols: tuple[str, ...] = ("created_at",)) -> int:
+    def merge(
+        self,
+        updates: DataFrame,
+        immutable_cols: tuple[str, ...] = ("created_at",),
+        deletes: DataFrame | None = None,
+    ) -> int:
         """MERGE: WHEN MATCHED UPDATE all columns (except immutables,
-        which keep the target's value), WHEN NOT MATCHED INSERT.
+        which keep the target's value), WHEN NOT MATCHED INSERT, and —
+        with ``deletes`` — WHEN MATCHED (key in deletes) DELETE, all in
+        one publish (≙ Delta ``MERGE … WHEN MATCHED … DELETE / UPDATE …
+        WHEN NOT MATCHED INSERT``). ``deletes`` carries ``self.keys``
+        plus the bucket columns; a key in both frames is updated.
 
         ``updates`` must be unique on ``self.keys`` — enforced here with
         a hard error rather than silently keeping one row (SURVEY §7.4
         risk 4: nondeterministic dedupe would poison fingerprint state).
 
-        Cost ∝ touched buckets: only buckets the update keys hash into
-        are read and rewritten (W1 at 100 TB = a per-product bucket
-        rewrite, not a table rewrite)."""
+        Cost ∝ touched buckets: only buckets the update and delete keys
+        hash into are read and rewritten (W1 at 100 TB = a per-product
+        bucket rewrite, not a table rewrite)."""
         updates = self._conform(updates).cache()
-        dup = updates.groupBy(*self.keys).count().filter(F.col("count") > 1)
-        if dup.limit(1).count() > 0:
-            sample = [r.asDict() for r in dup.limit(3).collect()]
-            raise ValueError(f"merge updates not unique on {self.keys}: {sample}")
+        try:
+            dup = updates.groupBy(*self.keys).count().filter(F.col("count") > 1)
+            if dup.limit(1).count() > 0:
+                sample = [r.asDict() for r in dup.limit(3).collect()]
+                raise ValueError(f"merge updates not unique on {self.keys}: {sample}")
 
-        touched = self._touched_buckets(updates)
-        if not touched:  # empty update batch: MERGE is a no-op
-            return self.current_version()
-        current = self._read_buckets(touched)
-        immutable_cols = tuple(c for c in immutable_cols if c in current.columns)
-        if immutable_cols:
-            preserved = current.select(
-                *self.keys, *[F.col(c).alias(f"__old_{c}") for c in immutable_cols]
-            )
-            updates = updates.join(preserved, self.keys, "left")
-            for c in immutable_cols:
-                updates = updates.withColumn(c, F.coalesce(F.col(f"__old_{c}"), F.col(c))).drop(
-                    f"__old_{c}"
-                )
-        untouched = current.join(updates.select(*self.keys), self.keys, "left_anti")
-        merged = untouched.unionByName(self._conform(updates))
-        if self._is_legacy():
-            # one-time layout migration: the old snapshot has no
-            # bucket->file mapping, so untouched buckets can't carry
-            # over by reference — rewrite everything once
-            rest = self.read().filter(~self._bucket_expr().isin(*[int(b) for b in touched])) \
-                if touched else self.spark.createDataFrame([], self.schema)
-            return self._publish_full(merged.unionByName(rest))
-        return self._publish_buckets(merged, touched)
+            key_cols = list(dict.fromkeys([*self.keys, *self.bucket_cols]))
+            keys = updates.select(*key_cols)
+            if deletes is not None:
+                keys = keys.unionByName(deletes.select(*key_cols))
+
+            def merged(current: DataFrame) -> DataFrame:
+                new = updates
+                for c in immutable_cols:
+                    if c in current.columns:
+                        old = current.select(*self.keys, F.col(c).alias("__old"))
+                        new = new.join(old, self.keys, "left").withColumn(
+                            c, F.coalesce("__old", c)
+                        ).drop("__old")
+                untouched = current.join(keys.select(*self.keys), self.keys, "left_anti")
+                return untouched.unionByName(new.select(*self.schema.fieldNames()))
+
+            return self._rewrite(keys, merged)
+        finally:
+            updates.unpersist()
 
     def delete_where(self, condition) -> int:
         """DELETE FROM t WHERE condition (anti-filter rewrite, W2).
@@ -403,14 +411,8 @@ class ParquetMergeStore:
         driver-side key collection. Bucket-pruned whenever the key frame
         carries the bucket columns."""
         key_cols = key_cols or self.keys
-        keys_only = keys_df.select(*key_cols).distinct()
-        if set(self.bucket_cols) <= set(key_cols) and not self._is_legacy():
-            touched = self._touched_buckets(keys_only)
-            if not touched:
-                return self.current_version()
-            remaining = self._read_buckets(touched).join(keys_only, key_cols, "left_anti")
-            return self._publish_buckets(remaining, touched)
-        return self._publish_full(self.read().join(keys_only, key_cols, "left_anti"))
+        keys = keys_df.select(*key_cols)
+        return self._rewrite(keys, lambda cur: cur.join(keys, key_cols, "left_anti"))
 
     def update_where(self, condition, assignments: dict[str, F.Column]) -> int:
         """UPDATE t SET ... WHERE condition (W3/W4 error-marking and
@@ -430,23 +432,35 @@ class ParquetMergeStore:
         timestamp touch never collects keys. Bucket-pruned when the key
         frame carries the bucket columns."""
         keys_only = keys_df.select(*key_cols).distinct()
-        prune = set(self.bucket_cols) <= set(key_cols) and not self._is_legacy()
-        if prune:
-            touched = self._touched_buckets(keys_only)
-            if not touched:
-                return self.current_version()
-            current = self._read_buckets(touched)
-        else:
-            current = self.read()
-        marker = keys_only.withColumn("__hit", F.lit(True))
-        updated = current.join(marker, key_cols, "left")
-        cond = F.col("__hit").isNotNull()
-        for col, expr in assignments.items():
-            updated = updated.withColumn(col, F.when(cond, expr).otherwise(F.col(col)))
-        updated = updated.drop("__hit")
-        if prune:
-            return self._publish_buckets(updated, touched)
-        return self._publish_full(updated)
+
+        def updated(current: DataFrame) -> DataFrame:
+            out = current.join(keys_only.withColumn("__hit", F.lit(True)), key_cols, "left")
+            hit = F.col("__hit").isNotNull()
+            for col, expr in assignments.items():
+                out = out.withColumn(col, F.when(hit, expr).otherwise(F.col(col)))
+            return out.drop("__hit")
+
+        return self._rewrite(keys_only, updated)
+
+    def _rewrite(self, keys: DataFrame, contents) -> int:
+        """The one keyed write path (merge / delete_keys / update_keys):
+        ``contents(current)`` maps the current rows of the buckets
+        ``keys`` hash into to those buckets' complete new contents,
+        which replace them in one publish. A key frame without the
+        bucket columns can't prune: the whole table is rewritten."""
+        if not set(self.bucket_cols) <= set(keys.columns):
+            return self._publish_full(contents(self.read()))
+        touched = self._touched_buckets(keys)
+        if not touched:  # no keys: the write is a no-op
+            return self.current_version()
+        new = contents(self._read_buckets(touched))
+        if self._is_legacy():
+            # one-time layout migration: the old snapshot has no
+            # bucket->file mapping, so untouched buckets can't carry
+            # over by reference — rewrite everything once
+            rest = self.read().filter(~self._bucket_expr().isin(*touched))
+            return self._publish_full(new.unionByName(rest))
+        return self._publish_buckets(new, touched)
 
     # -- helpers -----------------------------------------------------------
 
